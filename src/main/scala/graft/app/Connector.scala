@@ -44,15 +44,11 @@ final class Connector(
     * source-connectivity equivalent).
     */
   val metrics = new graft.streaming.MetricsRegistry(cfg.slotName)
-  /** Fused O17 metrics probe: counters ride the serializer stage as
-    * codegen'd accumulator bumps (a CollectMetrics observe node halved
-    * serializer throughput — see [[graft.streaming.PipelineProbe]]);
+  /** Fused O17 metrics probe ([[graft.streaming.PipelineProbe]]):
+    * counters ride the serializer stage as codegen'd accumulator bumps;
     * the collector drains per-batch deltas into the registry.
     */
-  val pipelineProbe = new graft.streaming.PipelineProbe(
-    spark.sparkContext,
-    graft.route.TopicRouter(cfg.kafka.tableTopicMapping),
-    cfg.keyField, s"graft.${cfg.slotName}")
+  val pipelineProbe = graft.streaming.PipelineProbe.forConfig(spark.sparkContext, cfg)
   private val metricsCollector =
     new graft.streaming.Metrics.Collector(Some(metrics), Some(pipelineProbe))
 

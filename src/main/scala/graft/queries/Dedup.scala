@@ -1238,15 +1238,7 @@ object Dedup {
     * included, not the full pair set).
     */
   def q148SortedNeighborhood(s: SparkSession, dir: String,
-      w: Int = 10, parts: Int = 32): DataFrame =
-    snmStages(s, dir, w, parts)._4
-
-  /** The q148 pipeline with its stage frames exposed (rank / candidates
-    * / filtered / verified) — the derived-decade adjudication probes
-    * time each stage in isolation (tools/SnmProbe).
-    */
-  private[graft] def snmStages(s: SparkSession, dir: String,
-      w: Int = 10, parts: Int = 32): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+      w: Int = 10, parts: Int = 32): DataFrame = {
     import s.implicits._
     val W = org.apache.spark.sql.expressions.Window
     val docs = shingled(s, dir)
@@ -1260,7 +1252,8 @@ object Dedup {
       // single most expensive stage of the whole query (measured at the
       // derived decades: the key pass is ~123 s at sf2d, and the
       // un-checkpointed sample pass re-paid it; cutting it here took the
-      // q148 decade ratio from x16.5 to ~linear). The q108 orderBy
+      // q148 decade ratio from x16.5 to ~linear — stage decomposition
+      // in BENCH_SCALING.md, second derived decade). The q108 orderBy
       // lesson, repartitionByRange edition.
       .localCheckpoint(true)
     val (ranged, offsets) =
@@ -1302,7 +1295,7 @@ object Dedup {
       .join(sig.as("q"), $"d2" === $"q.doc_id")
       .filter(call_function("slot_agreement", $"p.sig", $"q.sig") / 64.0 >= 0.3)
       .select($"d1", $"d2")
-    (ranked, cands, filtered, verifyPairs(filtered, docs))
+    verifyPairs(filtered, docs)
   }
 
   def q148SortedNeighborhoodSql(w: Int = 10): String =

@@ -385,6 +385,7 @@ object Similarity {
       if (k._1.sparkContext.isStopped) indexCache.remove(k)
     }
     val indexPath = indexCache.getOrElseUpdate((s, dir, nCentroids), {
+      FamilyCaches.noteBuild()
       val p = java.nio.file.Files.createTempDirectory("graft_ivf_index").toString
       writeIvfIndex(s, dir, p, nCentroids)
       p

@@ -1668,10 +1668,11 @@ object TextOps {
     * a real eval set is tiny (runtime-sized broadcast), but FORCING
     * the hint would OOM/degrade when the eval frame grows with the
     * corpus (the registered %-50 contract ties eval size to corpus
-    * size, so the derived decade grows it 10×). `evalCap` exists for
-    * the deployment-shaped decade probe (tools/ContamProbe): capped
-    * (fixed eval) ≈ uncapped at sf1d post-fix — the lanes are
-    * corpus-scan-bound, the honest linear term.
+    * size, so the derived decade grows it 10×). `evalCap` fixes the
+    * eval set for the deployment-shaped decade check: capped (fixed
+    * eval) ≈ uncapped at sf1d post-fix — the lanes are
+    * corpus-scan-bound, the honest linear term (BENCH_SCALING.md,
+    * round 13 session 2).
     */
   private[queries] def contaminationPairs(s: SparkSession, loaded: DataFrame,
       evalCap: Long = Long.MaxValue): DataFrame = {

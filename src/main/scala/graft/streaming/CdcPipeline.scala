@@ -99,31 +99,19 @@ object CdcPipeline {
     }
 
   /** Normalize + route + default-handle: ChangeEvent stream → Kafka sink
-    * contract (topic/key/value/headers), with per-batch observed metrics
-    * (O17) riding the plan.
-    */
-  def defaultTransform(events: DataFrame, cfg: ConnectorConfig): DataFrame =
-    defaultTransform(events, cfg, None)
-
-  /** As above; when a [[PipelineProbe]] is supplied the O17 metrics ride
-    * as fused codegen'd accumulator bumps instead of a CollectMetrics
-    * node — the node alone cost ~50% of serializer-lane throughput
-    * (SerBench isolate, sf0.1; even a bare `observe(count(1))` split
-    * the whole-stage-codegen span). The probe attaches PRE-handler so
-    * records the handler's filters silently drop surface as quality
-    * counters, and post-handler for the per-topic success counts.
+    * contract (topic/key/value/headers), with the O17 metrics riding as
+    * a fused [[PipelineProbe]] (codegen'd accumulator bumps, no
+    * CollectMetrics node). The probe attaches PRE-handler so records the
+    * handler's filters silently drop surface as quality counters, and
+    * post-handler for the per-topic success counts. Without a probe one
+    * is built from `cfg` ([[PipelineProbe.forConfig]]), so every call
+    * plans exactly what production runs.
     */
   def defaultTransform(events: DataFrame, cfg: ConnectorConfig,
-      probe: Option[PipelineProbe]): DataFrame = {
+      probe: Option[PipelineProbe] = None): DataFrame = {
     val router = TopicRouter(cfg.kafka.tableTopicMapping)
-    val watched = probe match {
-      case Some(pr) => pr.attach(events)
-      // observe fallback: ONE pre-handler CollectMetrics node carrying
-      // pipeline metrics AND quality counters (not two — each node
-      // costs ~2µs/row of stage-break overhead regardless of its
-      // expressions)
-      case None => Metrics.observedAll(events, router, cfg.keyField)
-    }
+    val pr = probeFor(events, cfg, probe)
+    val watched = pr.attach(events)
     val records = cfg.serializer match {
       case graft.app.ConnectorConfig.SerializerDebezium =>
         // envelope lane emits string key/value; the sink contract (and
@@ -137,13 +125,12 @@ object CdcPipeline {
         Handlers.declarative(watched, router, cfg.keyField,
           keepEventTime = false, emitTruncates = cfg.emitTruncates)
     }
-    val placed = withPlacement(records, cfg)
-    probe match {
-      case Some(pr) => pr.attachSink(placed)
-      case None =>
-        Metrics.observedSink(placed, cfg.kafka.tableTopicMapping.values.toSeq)
-    }
+    pr.attachSink(withPlacement(records, cfg))
   }
+
+  private def probeFor(events: DataFrame, cfg: ConnectorConfig,
+      probe: Option[PipelineProbe]): PipelineProbe =
+    probe.getOrElse(PipelineProbe.forConfig(events.sparkSession.sparkContext, cfg))
 
   /** Client-side balancer placement (reference `config.go:48-51`):
     * `ReferenceHash` and `CRC32Balancer` are pure key functions, so they
@@ -187,22 +174,14 @@ object CdcPipeline {
     */
   def orderedTransform(events: DataFrame, cfg: ConnectorConfig,
       probe: Option[PipelineProbe] = None): DataFrame = {
-    val watched = probe match {
-      case Some(pr) => pr.attach(events)
-      case None => Metrics.observed(events)
-    }
-    val placed = withPlacement(
-      Handlers.declarative(watched,
+    val pr = probeFor(events, cfg, probe)
+    pr.attachSink(withPlacement(
+      Handlers.declarative(pr.attach(events),
           TopicRouter(cfg.kafka.tableTopicMapping), cfg.keyField, keepEventTime = true)
         .repartition(col("key"))
         .sortWithinPartitions(col("key"), col("eventTime"))
         .drop("eventTime"), // narrow projection: keeps the sort, drops the column
-      cfg)
-    probe match {
-      case Some(pr) => pr.attachSink(placed)
-      case None =>
-        Metrics.observedSink(placed, cfg.kafka.tableTopicMapping.values.toSeq)
-    }
+      cfg))
   }
 
   /** Production sink: Spark's Kafka writer with the reference's producer
@@ -354,7 +333,7 @@ object CdcPipeline {
       return
     }
     // the snapshot race is the throughput-critical path: same fused
-    // probe as the CDC stream (the observe fallback costs ~46% there)
+    // probe as the CDC stream
     val records = defaultTransform(snap, cfg, probe)
     val writer = sink match {
       case "parquet" =>

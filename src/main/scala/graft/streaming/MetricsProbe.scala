@@ -25,8 +25,9 @@ import graft.route.TopicRouter
   * expressions interpreted per row. SerBench isolate (sf0.1, 600k
   * rows): envelope 1.94s → envelope+observe 3.88s, and a bare
   * `observe(count(1))` alone costs 3.27s — the node itself, not the
-  * metric expressions, is the overhead. The reference's metrics are
-  * plain counter increments and must be ~free.
+  * metric expressions, is the overhead (BENCH_SCALING.md round 14,
+  * SERBENCH_r16.json). The reference's metrics are plain counter
+  * increments and must be ~free.
   *
   * This probe is a native boolean [[Expression]] that always returns
   * true, attached as a `filter` (never pushed/eliminated: it declares
@@ -41,8 +42,8 @@ import graft.route.TopicRouter
   *
   * Delivery: [[Metrics.Collector]] drains per-batch DELTAS from the
   * driver-side accumulators at each StreamingQueryProgress and feeds
-  * the [[MetricsRegistry]] — same metric families as the observe lane
-  * (events, process latency, quality violations, per-topic successes).
+  * the [[MetricsRegistry]] (events, process latency, quality
+  * violations, per-topic successes).
   *
   * Counter semantics — AT-LEAST-ONCE, inflate-never-lose (pinned by
   * MetricsSpec's retry-injection test): updates from FAILED task
@@ -83,7 +84,7 @@ final class PipelineProbe(
   }
 
   /** Attach the pre-handler probe (events + quality + latency + table
-    * census — the [[Metrics.observedAll]] metric set) to a
+    * census) to a
     * ChangeEvent-schema frame. The probe rides as a PASS-THROUGH
     * projection wrapping `op` — not a filter: the optimizer pushes any
     * filter below a deterministic Project by SUBSTITUTING aliases into
@@ -102,9 +103,9 @@ final class PipelineProbe(
       PipelineProbe.column(PipelineProbeExpr(children, this)))
   }
 
-  /** Attach the post-handler per-topic success counter (the
-    * [[Metrics.observedSink]] metric set) to a sink-contract frame —
-    * the same pass-through-projection shape, wrapping `topic`.
+  /** Attach the post-handler per-topic success counter to a
+    * sink-contract frame — the same pass-through-projection shape,
+    * wrapping `topic`.
     */
   def attachSink(records: DataFrame): DataFrame =
     records.withColumn("topic", PipelineProbe.column(
@@ -193,7 +194,7 @@ final class PipelineProbe(
       val img = if (kind == 2) oldData else newData // DELETE reads the pre-image
       if (keyIsNull(img)) nullKey.add(1L)
     }
-    if (!etNull) latency.observe(etMicros)
+    if (!etNull) latency.record(etMicros)
     true
   }
 
@@ -235,6 +236,13 @@ final class PipelineProbe(
 }
 
 object PipelineProbe {
+  /** The probe for a connector config: routing from the topic mapping,
+    * null-key checks on `keyField`, accumulators named after the slot.
+    */
+  def forConfig(sc: SparkContext, cfg: graft.app.ConnectorConfig): PipelineProbe =
+    new PipelineProbe(sc, TopicRouter(cfg.kafka.tableTopicMapping), cfg.keyField,
+      s"graft.${cfg.slotName}")
+
   final case class Deltas(
       events: Long,
       unknownOp: Long,
@@ -271,7 +279,7 @@ final class LatestLatencyAccumulator
   private var latencyMs = 0L
   @transient private var taskNowMs = 0L
 
-  def observe(eventTimeMicros: Long): Unit = {
+  def record(eventTimeMicros: Long): Unit = {
     if (taskNowMs == 0L) taskNowMs = System.currentTimeMillis()
     obs += 1L
     stamp = taskNowMs
@@ -285,7 +293,7 @@ final class LatestLatencyAccumulator
     c
   }
   override def reset(): Unit = { obs = 0L; stamp = 0L; latencyMs = 0L; taskNowMs = 0L }
-  override def add(v: java.lang.Long): Unit = observe(v.longValue())
+  override def add(v: java.lang.Long): Unit = record(v.longValue())
   override def merge(other: AccumulatorV2[java.lang.Long, (Long, Long, Long)]): Unit =
     synchronized {
       other match {

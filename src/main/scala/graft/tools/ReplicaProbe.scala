@@ -14,7 +14,7 @@ import graft.model.Op
   * implementation (copied verbatim below, horizon machinery inlined)
   * and the CURRENT `Materialize.applyBatch`, alternating reps in ONE
   * session so host drift cannot masquerade as a win (the r16 probe
-  * discipline — Q137Probe/Q212Probe). Prints wall seconds AND Spark
+  * discipline, OPTIMIZATION_r16.md §7 and §9). Prints wall seconds AND Spark
   * job counts per replay; a row-equality audit of the final replica
   * closes each rep. Tools-only: not referenced by any query path.
   */

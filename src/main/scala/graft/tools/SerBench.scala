@@ -11,11 +11,10 @@ import graft.transform.Handlers
   * flat-vs-envelope throughput delta to its component expressions.
   * Usage: runMain graft.tools.SerBench [sfDir] [isolate]
   *
-  * `isolate` mode runs the round-9 regression experiment instead: the
-  * flat lane, the envelope lane, and the envelope lane with the round-8
-  * quality-counter observe attached, INTERLEAVED round-robin across
-  * attempts so co-located load drift hits every lane equally — the
-  * isolation run VERDICT r8 asked for on the 321k→272k envelope drop.
+  * `isolate` mode runs the flat lane, the envelope lane, and the
+  * envelope lane with the production metrics probe attached,
+  * INTERLEAVED round-robin across attempts so co-located load drift
+  * hits every lane equally.
   */
 object SerBench {
   def main(args: Array[String]): Unit = {
@@ -43,27 +42,6 @@ object SerBench {
       val lanes: Seq[(String, () => DataFrame)] = Seq(
         "flat" -> (() => Handlers.declarative(events, router, "l_orderkey")),
         "envelope" -> (() => Handlers.debeziumEnvelope(events, router, "l_orderkey")),
-        "envelope+observe" -> (() => Handlers.debeziumEnvelope(
-          graft.streaming.Metrics.observedQuality(
-            graft.streaming.Metrics.observed(events), router, "l_orderkey"),
-          router, "l_orderkey")),
-        "env+obs-no-quality" -> (() => Handlers.debeziumEnvelope(
-          graft.streaming.Metrics.observed(events), router, "l_orderkey")),
-        "env+quality-no-img" -> (() => Handlers.debeziumEnvelope(
-          events.observe("q_noimg",
-            org.apache.spark.sql.functions.sum(org.apache.spark.sql.functions.when(
-              !col("op").isin(graft.model.Op.all: _*), 1L).otherwise(0L)).as("quality:unknown_op"),
-            org.apache.spark.sql.functions.sum(org.apache.spark.sql.functions.when(
-              router.resolveColumn(col("tableNamespace"), col("tableName")).isNull,
-              1L).otherwise(0L)).as("quality:unroutable_table")),
-          router, "l_orderkey")),
-        "env+count-observe" -> (() => Handlers.debeziumEnvelope(
-          events.observe("bare",
-            org.apache.spark.sql.functions.count(lit(1)).as("n")),
-          router, "l_orderkey")),
-        "env+merged-observe" -> (() => Handlers.debeziumEnvelope(
-          graft.streaming.Metrics.observedAll(events, router, "l_orderkey"),
-          router, "l_orderkey")),
         // the fused accumulator probe (production path since r14): the
         // FULL metric set — pipeline + quality PRE-handler and per-topic
         // success counts POST-handler — with zero CollectMetrics nodes

@@ -33,6 +33,18 @@ class AnnRecallSpec extends SparkSpec {
     assert(recall >= 0.4, s"recall=$recall")
   }
 
+  test("q52 counts its index build once: a cache miss is one build, a hit none") {
+    // a fresh source dir keys a fresh index entry for this session
+    val tmp = java.nio.file.Files.createTempDirectory("graft-q52-build")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/embeddings.parquet"),
+      tmp.resolve("embeddings.parquet"))
+    val before = FamilyCaches.buildCount
+    Similarity.q52AnnIvfIndexed(spark, tmp.toString)
+    assert(FamilyCaches.buildCount == before + 1)
+    Similarity.q52AnnIvfIndexed(spark, tmp.toString)
+    assert(FamilyCaches.buildCount == before + 1)
+  }
+
   test("persisted IVF index (q52) answers exactly like in-query IVF (q51), partition-pruned") {
     val fromIndex = Similarity.q52AnnIvfIndexed(spark, dir)
     val live      = Similarity.q51AnnIvf(spark, dir)

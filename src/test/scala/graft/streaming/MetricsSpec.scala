@@ -90,6 +90,40 @@ class MetricsSpec extends SparkSpec {
     assert(conn.metrics.successCount("t") == 3)
   }
 
+  test("transforms without a probe plan the fused probe, never a CollectMetrics node") {
+    // a caller that passes no probe gets one built from the config, so
+    // every transform compiles to the plan production runs
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object aqe extends AdaptiveSparkPlanHelper
+    val s = spark
+    import s.implicits._
+    // an RDD-backed frame: a local Seq would be folded into a
+    // LocalTableScan at optimization time, hiding the plan under test
+    val events = s.sparkContext.parallelize(1 to 5, 2).map(i => graft.model.ChangeEvent(
+      java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), "public", "users",
+      null, Map("id" -> i.toString), "INSERT")).toDF()
+    val cfg = ConnectorConfig(sourceDir = "", checkpointDir = "",
+      kafka = KafkaSinkConfig(Seq("unused:9092"),
+        tableTopicMapping = Map("public.users" -> "t")))
+    val debezium = cfg.copy(serializer = ConnectorConfig.SerializerDebezium)
+    def audit(tag: String, df: DataFrame): Unit = {
+      assert(df.collect().length == 5, tag)
+      val plan = df.queryExecution.executedPlan
+      val nodes = aqe.flatMap(plan)(Seq(_))
+      assert(!nodes.exists(_.nodeName == "CollectMetrics"), s"$tag:\n$plan")
+      val probes = nodes.flatMap(_.expressions.flatMap(_.collect {
+        case e: PipelineProbeExpr => e.prettyName
+        case e: TopicProbeExpr => e.prettyName
+      }))
+      assert(probes.sorted == Seq("graft_metrics_probe", "graft_topic_probe"),
+        s"$tag:\n$plan")
+    }
+    audit("flat", CdcPipeline.defaultTransform(events, cfg))
+    audit("debezium", CdcPipeline.defaultTransform(events, debezium))
+    audit("ordered", CdcPipeline.orderedTransform(events, cfg))
+  }
+
   test("probe counters under a task retry: failed-attempt updates dropped, nothing lost") {
     // The probe bumps Spark accumulators from a TRANSFORMATION. Spark's
     // accumulator protocol drops updates from FAILED task attempts
